@@ -1,5 +1,7 @@
 package graft.etl
 
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -13,12 +15,23 @@ import graft.GraftTestBase
   * Small tables compare row-for-row; the 3.1M-row fact compares via
   * count + grouped/checksum aggregates (full row diff would add minutes
   * for no extra signal).
+  *
+  * Neither directory is in the repo. Each test first assumes both are
+  * present, so where the reference is not mounted the tests are reported
+  * as canceled (not passed) and referenceCompat parity stays unverified.
   */
 class EtlGoldenSpec extends GraftTestBase {
 
   private val dataRoot  = "/root/reference/data"
   private val goldenDir = "/root/reference/s3a/udatalake"
   private val compat    = CompatConfig.referenceCompat
+
+  /** Cancels the calling test unless the reference inputs and the
+    * committed golden tables are both mounted. */
+  private def assumeReferenceMounted(): Unit =
+    Seq(dataRoot, goldenDir).foreach { dir =>
+      assume(Files.isDirectory(Paths.get(dir)), s"$dir is not mounted")
+    }
 
   private def golden(leaf: String): DataFrame =
     spark.read.parquet(s"$goldenDir/$leaf")
@@ -33,31 +46,37 @@ class EtlGoldenSpec extends GraftTestBase {
   }
 
   test("trans-mode dim matches committed i94mode.parquet") {
+    assumeReferenceMounted()
     assertSameRows(CapstonePipeline.transModeDim(spark), golden("i94mode.parquet"))
   }
 
   test("visa dim matches committed i94visa.parquet") {
+    assumeReferenceMounted()
     assertSameRows(CapstonePipeline.visaDim(spark), golden("i94visa.parquet"))
   }
 
   test("demographics dim matches committed us_cities_demographics.parquet") {
+    assumeReferenceMounted()
     assertSameRows(
       CapstonePipeline.demographicsDim(spark, s"$dataRoot/us-cities-demographics.csv"),
       golden("us_cities_demographics.parquet"))
   }
 
   test("country dim matches committed country.parquet (dead join reproduced)") {
+    assumeReferenceMounted()
     assertSameRows(
       CapstonePipeline.countryDim(spark, s"$dataRoot/I94CIT_I94RES.csv", None, compat),
       golden("country.parquet"))
   }
 
   test("calendar dim matches committed i94date.parquet") {
+    assumeReferenceMounted()
     val fact = CapstonePipeline.immigrationFact(spark, s"$dataRoot/sas_data", compat)
     assertSameRows(CapstonePipeline.calendarDim(fact, compat), golden("i94date.parquet"))
   }
 
   test("immigration fact matches committed immigration.parquet on count + checksums") {
+    assumeReferenceMounted()
     val got  = CapstonePipeline.immigrationFact(spark, s"$dataRoot/sas_data", compat)
     val want = golden("immigration.parquet")
     assert(got.columns.toSeq == want.columns.toSeq)
@@ -76,6 +95,7 @@ class EtlGoldenSpec extends GraftTestBase {
   }
 
   test("B1 check surfaces the duplicate-admnum count instead of silently dropping") {
+    assumeReferenceMounted()
     val dups = CapstonePipeline.duplicateAdmnumCount(spark, s"$dataRoot/sas_data")
     // the committed fact kept ALL rows (3,096,313) despite duplicates
     assert(dups > 0)
@@ -83,6 +103,7 @@ class EtlGoldenSpec extends GraftTestBase {
   }
 
   test("fixed mode diverges where documented: i94mode null-fill is 9") {
+    assumeReferenceMounted()
     val fixed = CapstonePipeline.immigrationFact(spark, s"$dataRoot/sas_data")
     assert(fixed.filter(col("i94mode") === 0).count() == 0)
     assert(fixed.filter(col("i94mode") === 9).count() >=

@@ -1,5 +1,7 @@
 package graft.etl
 
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.functions._
 
 import graft.GraftTestBase
@@ -10,10 +12,24 @@ import graft.GraftTestBase
 class PartitionedWriteSpec extends GraftTestBase {
 
   test("partitioned fact write prunes partitions on read") {
-    // sample the reference fact (50k rows) for a fast write
-    val sample = spark.read.parquet("/root/reference/data/sas_data")
-      .limit(50000)
-    val dir = java.nio.file.Files.createTempDirectory("graft_part").toString
+    // 50k fact rows for a fast write: the reference fact input where it
+    // is mounted, else a deterministic in-memory sample shaped per
+    // FIXTURES.md §A1 (all-double numerics, i94yr/i94mon 2016.0/4.0)
+    val sasData = "/root/reference/data/sas_data"
+    val sample =
+      if (Files.isDirectory(Paths.get(sasData)))
+        spark.read.parquet(sasData).limit(50000)
+      else
+        spark.range(50000).select(
+          (col("id") + 1).cast("double").as("cicid"),
+          lit(2016.0).as("i94yr"),
+          lit(4.0).as("i94mon"),
+          (lit(20545) + col("id") % 30).cast("double").as("arrdate"),
+          element_at(array(lit(1.0), lit(2.0), lit(3.0), lit(9.0),
+            lit(null).cast("double")), (col("id") % 5 + 1).cast("int"))
+            .as("i94mode"),
+          (col("id") % 3 + 1).cast("double").as("i94visa"))
+    val dir = Files.createTempDirectory("graft_part").toString
     sample.write.mode("overwrite")
       .partitionBy("i94yr", "i94mon").parquet(s"$dir/fact")
 
