@@ -1,6 +1,7 @@
 package graft.etl
 
 import java.nio.file.Paths
+import java.util.concurrent.{Callable, ExecutionException, Executors}
 
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -53,26 +54,43 @@ object CapstonePipeline {
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
   }
 
-  /** US-demographics dim (etl.py:102-131): `;`-separated CSV (S2) →
-    * casts (P4) → per-city collapse (A1). min() instead of first():
+  /** Declared schema of the demographics CSV (FIXTURES.md §A2): the
+    * types `inferSchema` gives the reference file, without the extra
+    * inference pass over it. */
+  val DemographicsSchema: StructType = StructType(Seq(
+    StructField("City", StringType), StructField("State", StringType),
+    StructField("Median Age", DoubleType),
+    StructField("Male Population", IntegerType), StructField("Female Population", IntegerType),
+    StructField("Total Population", IntegerType), StructField("Number of Veterans", IntegerType),
+    StructField("Foreign-born", IntegerType), StructField("Average Household Size", DoubleType),
+    StructField("State Code", StringType), StructField("Race", StringType),
+    StructField("Count", IntegerType)))
+
+  /** Declared schema of the country-code CSV (FIXTURES.md §A3). */
+  val CountrySchema: StructType = StructType(Seq(
+    StructField("Code", IntegerType), StructField("I94CTRY", StringType)))
+
+  /** Header CSV read with a declared schema. PERMISSIVE: a field that
+    * does not parse as its declared type reads as null. */
+  private[etl] def readCsv(spark: SparkSession, path: String, schema: StructType,
+                           sep: String): DataFrame =
+    spark.read.schema(schema)
+      .options(Map("sep" -> sep, "header" -> "true", "mode" -> "PERMISSIVE"))
+      .csv(path)
+
+  /** US-demographics dim (etl.py:102-131): `;`-separated CSV (S2), read
+    * with [[DemographicsSchema]] (the reference's casts, P4, happen at
+    * read time) → per-city collapse (A1). min() instead of first():
     * per-city values repeat across the (city, race) grain, so this is
     * value-identical but deterministic. */
-  def demographicsDim(spark: SparkSession, csvPath: String): DataFrame = {
-    val raw = spark.read
-      .options(Map("sep" -> ";", "header" -> "true", "inferSchema" -> "true"))
-      .csv(csvPath)
-    val intCols = Seq("Count", "Male Population", "Female Population",
-      "Total Population", "Number of Veterans", "Foreign-born")
-    val dblCols = Seq("Median Age", "Average Household Size")
-    val casted = Casts.castTo(Casts.castTo(raw, intCols, IntegerType), dblCols, DoubleType)
-    casted
+  def demographicsDim(spark: SparkSession, csvPath: String): DataFrame =
+    readCsv(spark, csvPath, DemographicsSchema, ";")
       .groupBy(col("City"), col("State"), col("State Code"))
       .agg(
         min(col("Median Age")).as("median_age"),
         min(col("Male Population")).as("male_population"),
         min(col("Female Population")).as("female_population"),
         min(col("Total Population")).as("total_population"))
-  }
 
   /** Immigration fact (etl.py:143-181): parquet scan → column drops →
     * null-fill of i94mode → int casts. The reference's dead dedup (B1,
@@ -92,11 +110,15 @@ object CapstonePipeline {
   }
 
   /** The reference's discarded dedup check (B1), made explicit:
-    * how many rows share an admission number with an earlier row. */
-  def duplicateAdmnumCount(spark: SparkSession, parquetPath: String): Long = {
-    val raw = spark.read.parquet(parquetPath)
-    raw.count() - raw.dropDuplicates("admnum").count()
-  }
+    * how many rows share an admission number with an earlier row. One
+    * action; the same as `count() - dropDuplicates("admnum").count()`,
+    * since grouping also puts nulls in one group and normalizes NaN and
+    * -0.0. */
+  def duplicateAdmnumCount(spark: SparkSession, parquetPath: String): Long =
+    spark.read.parquet(parquetPath)
+      .groupBy("admnum").count()
+      .agg(coalesce(sum(col("count") - 1), lit(0L)))
+      .head().getLong(0)
 
   /** Country dim (etl.py:194-230): country-code lookup CSV (S4)
     * left-joined (J1) to per-country average temperature (A2).
@@ -110,9 +132,7 @@ object CapstonePipeline {
   def countryDim(spark: SparkSession, ctryCsvPath: String,
                  temperatureCsvPath: Option[String],
                  compat: CompatConfig = CompatConfig.fixed): DataFrame = {
-    val ctry = spark.read.format("csv")
-      .options(Map("header" -> "true", "inferSchema" -> "true"))
-      .load(ctryCsvPath)
+    val ctry = readCsv(spark, ctryCsvPath, CountrySchema, ",")
       .withColumn("I94CTRY",
         if (compat.caseMismatchedCountryJoin) lower(col("I94CTRY"))
         else upper(trim(col("I94CTRY"))))
@@ -175,18 +195,20 @@ object CapstonePipeline {
     * shuffle partitions wrote 4-row dims as multi-part output); the fact
     * can partition by (i94yr, i94mon) for scale-out pruning.
     *
-    * `parallel = true` stages the six writes CONCURRENTLY from the
-    * driver — the step dependency analysis in SURVEY.md §3.1 shows only
-    * calendar depends on another step's plan (and lazily, through
-    * lineage), so independent Spark jobs can overlap: the scheduler
-    * interleaves the small dim jobs with the big fact write instead of
-    * idling the cluster between them. Outputs are identical either way
-    * (each write is an isolated job). */
+    * The six writes run CONCURRENTLY, each on its own thread of a pool
+    * that lives for this call only. The step dependency analysis in
+    * SURVEY.md §3.1 shows only calendar depends on another step's plan
+    * (and lazily, through lineage), so the scheduler interleaves the
+    * small dim jobs with the big fact write instead of idling the
+    * cluster between them. The pool's threads are created here, so they
+    * inherit the caller's Spark local properties (job group, scheduler
+    * pool); a shared pool's reused threads would carry stale ones. Every
+    * write finishes before `run` returns or throws; the first failing
+    * step's exception is rethrown, with the others suppressed in it. */
   def run(spark: SparkSession, dataRoot: String, outputRoot: String,
           temperatureCsvPath: Option[String] = None,
           compat: CompatConfig = CompatConfig.fixed,
-          partitionFactByMonth: Boolean = false,
-          parallel: Boolean = false): StagedTables = {
+          partitionFactByMonth: Boolean = false): StagedTables = {
     val transMode = transModeDim(spark)
     val visa      = visaDim(spark)
     val demo      = demographicsDim(spark, join(dataRoot, "us-cities-demographics.csv"))
@@ -215,12 +237,18 @@ object CapstonePipeline {
       () => write(country, "country.parquet", one = true),
       () => write(calendar, "i94date.parquet", one = true))
 
-    if (parallel) {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      Await.result(Future.sequence(steps.map(s => Future(s()))), Duration.Inf)
-    } else steps.foreach(_())
+    val pool = Executors.newFixedThreadPool(steps.size)
+    try {
+      val pending = steps.map(step => pool.submit(new Callable[Unit] { def call(): Unit = step() }))
+      val failures = pending.flatMap { f =>
+        try { f.get(); None }
+        catch { case e: ExecutionException => Some(e.getCause) }
+      }
+      failures.headOption.foreach { first =>
+        failures.tail.foreach(first.addSuppressed)
+        throw first
+      }
+    } finally pool.shutdown()
 
     StagedTables(fact, visa, transMode, demo, country, calendar)
   }
