@@ -266,21 +266,21 @@ object CapstonePipeline {
   }
 
   /** The notebook's quality gate (NB cells 42-43) with fixed semantics:
-    * row counts + FK orphan counts per star edge. */
-  def qualityReport(spark: SparkSession, t: StagedTables): DataFrame = {
-    val counts = Checks.rowCounts(spark, t.all)
-      .select(concat(lit("rows:"), col("table_name")).as("check"),
-              col("n_rows").as("value"))
-    val fks = Checks.fkIntegrity(Seq(
-      Checks.FkEdge("immigration.i94res->country.Code", t.immigration, "i94res", t.country, "Code"),
-      Checks.FkEdge("immigration.i94addr->demographics.State Code", t.immigration, "i94addr", t.demographics, "State Code"),
-      Checks.FkEdge("immigration.i94visa->i94visa.vid", t.immigration, "i94visa", t.visa, "vid"),
-      Checks.FkEdge("immigration.i94mode->i94mode.i94mode", t.immigration, "i94mode", t.transMode, "i94mode"),
-      Checks.FkEdge("immigration.arrdate->i94date.arrival_sasdate", t.immigration, "arrdate", t.calendar, "arrival_sasdate")))
-      .select(concat(lit("orphans:"), col("fk_edge")).as("check"),
-              col("orphan_keys").as("value"))
-    counts.union(fks).orderBy(col("check"))
-  }
+    * row counts + FK orphan counts per star edge, as `(check, value)`
+    * rows sorted by `check`. `Checks.starIntegrity` reads each dim once
+    * and the fact in a single aggregate, so this runs its jobs when
+    * called and returns a local frame; collecting it launches none.
+    * Driver memory: the five dims' key columns plus each edge's orphan
+    * keys. */
+  def qualityReport(spark: SparkSession, t: StagedTables): DataFrame =
+    Checks.starIntegrity("immigration", t.immigration, Seq(
+      Checks.StarEdge("immigration.i94res->country.Code", "i94res", "country", t.country, "Code"),
+      Checks.StarEdge("immigration.i94addr->demographics.State Code", "i94addr",
+        "us_cities_demographics", t.demographics, "State Code"),
+      Checks.StarEdge("immigration.i94visa->i94visa.vid", "i94visa", "i94visa", t.visa, "vid"),
+      Checks.StarEdge("immigration.i94mode->i94mode.i94mode", "i94mode", "i94mode", t.transMode, "i94mode"),
+      Checks.StarEdge("immigration.arrdate->i94date.arrival_sasdate", "arrdate", "i94date",
+        t.calendar, "arrival_sasdate")))
 
   /** The notebook's example analytical query (NB:803-807, cell 30):
     * immigrants + max temperature per residence country. */

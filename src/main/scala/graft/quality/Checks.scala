@@ -1,8 +1,10 @@
 package graft.quality
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, FloatType}
+import org.apache.spark.sql.types._
 
 /** Data-quality checks, re-expressed with fixed semantics.
   *
@@ -18,9 +20,17 @@ import org.apache.spark.sql.types.{DoubleType, FloatType}
   *   - results come back as DataFrames so they compose with the rest of a
   *     plan instead of printing to the console.
   *
-  * All checks are single-pass distributed aggregates — no driver-side
-  * loops; the null profile is one wide partial+final aggregate regardless
-  * of column count.
+  * `nullProfile` and `rowCounts` are distributed aggregates, one pass
+  * per table; the null profile is one wide partial+final aggregate
+  * regardless of column count. FK orphans come in two forms, chosen by
+  * the size of the parents:
+  *   - `fkIntegrity` (distinct + left-anti join per edge) when a parent
+  *     is itself large (TPC-H `part`, `supplier`): nothing is collected
+  *     to the driver, at one child scan per edge;
+  *   - `starIntegrity` when every parent is a lookup dim of a star
+  *     schema: the dims' key columns are collected to the driver and
+  *     the fact is scanned once, by one aggregate that tests each FK
+  *     against its dim's keys as an `InSet` (no Expand, no join).
   */
 object Checks {
 
@@ -72,14 +82,15 @@ object Checks {
     * child keys with no parent (0 = intact). Distinct-before-join keeps
     * the anti-join input small (reference's own trick, qhi.py:53), and the
     * parent side is a key list Catalyst can broadcast. Null FKs are not
-    * orphans (SQL FK semantics).
+    * orphans (SQL FK semantics), and neither are NaN FKs (`na.drop()`).
     *
-    * Deliberately NOT fused into one pass per child table: each edge's
-    * scan prunes to a single FK column (columnar IO ≈ free per edge)
-    * and the distinct compresses map-side before any join, whereas a
-    * fused multi-edge aggregate needs an Expand over the full fact
-    * (k× the rows, no pre-join compression) — measured 2x slower at
-    * sf0.1, and the same argument holds on columnar storage at scale. */
+    * This is the form for large parents: each edge's scan prunes to a
+    * single FK column and the distinct compresses map-side before the
+    * join, and no key set has to fit on the driver. A fused multi-edge
+    * form that still joins needs an Expand over the full child (k× the
+    * rows, no pre-join compression), measured 2x slower at sf0.1. When
+    * the parents are small lookup dims, `starIntegrity` avoids both the
+    * per-edge scans and the Expand. */
   def fkIntegrity(edges: Seq[FkEdge]): DataFrame = {
     val perEdge = edges.map { e =>
       val orphans = e.child.select(col(e.fk).as("k")).na.drop().distinct()
@@ -89,4 +100,58 @@ object Checks {
     }
     perEdge.reduce(_.union(_)).orderBy("fk_edge")
   }
+
+  /** One FK edge of a star schema: `fact[fk]` must exist in `dim[pk]`.
+    * `dimName` names the dim's row count. */
+  final case class StarEdge(name: String, fk: String, dimName: String,
+                            dim: DataFrame, pk: String)
+
+  /** Row counts and FK orphan counts of a star schema, reading each table
+    * once. Each dim's key column is collected to the driver (one job per
+    * dim); the array gives the dim's row count, and its non-null values
+    * the key set. The fact is then scanned by ONE aggregate: `count(1)`
+    * plus, per edge, `size(collect_set(when(NOT fk IN keys, fk)))`.
+    * Null and NaN FKs and matched keys become null, which `collect_set`
+    * drops, so each set holds only that edge's orphan keys. The semantics
+    * are `fkIntegrity`'s: distinct FKs, neither null nor NaN, with no
+    * parent key, compared in the type the analyzer coerces both sides
+    * to, with -0.0 equal to 0.0 as in a join key (`InSet` and
+    * `collect_set` compare doubles that way).
+    *
+    * Driver memory: every dim's key column, plus each edge's distinct
+    * orphan keys in the aggregate's result. Use `fkIntegrity` when a
+    * parent is too large for that.
+    *
+    * Runs its jobs when called and returns a local `(check, value)`
+    * frame sorted by `check`: `rows:<table>` for the fact and each dim,
+    * `orphans:<edge>` per edge. Collecting it launches no job. */
+  def starIntegrity(factName: String, fact: DataFrame, edges: Seq[StarEdge]): DataFrame = {
+    require(edges.map(_.dimName).distinct.size == edges.size,
+      "starIntegrity takes one edge per dim")
+    val keyed = edges.map { e =>
+      val keys = e.dim.select(col(e.pk)).collect().map(_.get(0))
+      (e, keys.length.toLong, keys.filter(_ != null).distinct.toSeq)
+    }
+    val orphanSets = keyed.map { case (e, _, keys) =>
+      val fk = nanAsNull(fact, e.fk)
+      size(collect_set(when(!fk.isin(keys: _*), fk)))
+    }
+    val r = fact.agg(count(lit(1)), orphanSets: _*).head()
+    val checks = (s"rows:$factName" -> r.getLong(0)) +:
+      keyed.zipWithIndex.flatMap { case ((e, n, _), i) =>
+        Seq(s"rows:${e.dimName}" -> n, s"orphans:${e.name}" -> r.getInt(i + 1).toLong)
+      }
+    fact.sparkSession.createDataFrame(
+      checks.sortBy(_._1).map { case (c, v) => Row(c, v) }.asJava,
+      StructType(Seq(StructField("check", StringType, nullable = false),
+                     StructField("value", LongType, nullable = false))))
+  }
+
+  /** `df[name]`, with NaN as null as `na.drop()` treats it; `collect_set`
+    * would also keep every NaN as its own element. */
+  private def nanAsNull(df: DataFrame, name: String): Column =
+    df.schema(name).dataType match {
+      case DoubleType | FloatType => when(!isnan(col(name)), col(name))
+      case _ => col(name)
+    }
 }

@@ -4,14 +4,17 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path}
 import java.util.concurrent.ConcurrentLinkedQueue
 
+import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.GraftTestBase
+import graft.etl.CapstonePipeline.StagedTables
+import graft.quality.Checks
 
 /** The capstone pipeline end to end, with no external mount: small
   * deterministic inputs shaped like FIXTURES.md §A1-A3 are written to a
@@ -137,12 +140,21 @@ class CapstonePipelineSpec extends GraftTestBase {
 
   // ------------------------------------------------------------- tests
 
-  Seq("fixed" -> CompatConfig.fixed, "referenceCompat" -> CompatConfig.referenceCompat)
+  private val modes = Seq("fixed" -> CompatConfig.fixed, "referenceCompat" -> CompatConfig.referenceCompat)
+
+  /** One pipeline run per mode, staged once and read by every test. */
+  private val stagedRoots = TrieMap.empty[String, String]
+  private def stagedPlanted(mode: String, compat: CompatConfig): StagedTables =
+    CapstonePipeline.readData(spark, stagedRoots.getOrElseUpdate(mode, {
+      val out = Files.createTempDirectory(s"graft_capstone_$mode").toString
+      CapstonePipeline.run(spark, dataRoot.toString, out, None, compat)
+      out
+    }))
+
+  modes
     .foreach { case (mode, compat) =>
       test(s"run → readData → qualityReport → exampleQuery on planted inputs ($mode)") {
-        val out = Files.createTempDirectory(s"graft_capstone_$mode").toString
-        CapstonePipeline.run(spark, dataRoot.toString, out, None, compat)
-        val staged = CapstonePipeline.readData(spark, out)
+        val staged = stagedPlanted(mode, compat)
 
         staged.all.foreach { case (table, df) =>
           assert(df.schema.map(f => f.name -> f.dataType) == stagedColumns(table), table)
@@ -267,5 +279,145 @@ class CapstonePipelineSpec extends GraftTestBase {
       .filterNot(finished)
     assert(unfinished.isEmpty, s"run threw ($err) before these writes finished: $unfinished")
     assert(!finished("us_cities_demographics"))
+  }
+
+  // ------------------------------------------- quality report, star form
+
+  /** The oracle of the differential test below: the same report
+    * composed from `rowCounts` ∪ `fkIntegrity`, sorted by check. */
+  private def composedReport(t: StagedTables): DataFrame = {
+    val counts = Checks.rowCounts(spark, t.all)
+      .select(concat(lit("rows:"), col("table_name")).as("check"),
+              col("n_rows").as("value"))
+    val fks = Checks.fkIntegrity(Seq(
+      Checks.FkEdge("immigration.i94res->country.Code", t.immigration, "i94res", t.country, "Code"),
+      Checks.FkEdge("immigration.i94addr->demographics.State Code", t.immigration, "i94addr", t.demographics, "State Code"),
+      Checks.FkEdge("immigration.i94visa->i94visa.vid", t.immigration, "i94visa", t.visa, "vid"),
+      Checks.FkEdge("immigration.i94mode->i94mode.i94mode", t.immigration, "i94mode", t.transMode, "i94mode"),
+      Checks.FkEdge("immigration.arrdate->i94date.arrival_sasdate", t.immigration, "arrdate", t.calendar, "arrival_sasdate")))
+      .select(concat(lit("orphans:"), col("fk_edge")).as("check"),
+              col("orphan_keys").as("value"))
+    counts.union(fks).orderBy(col("check"))
+  }
+
+  private type FactRow = (Option[Int], Option[String], Option[Double], Option[Int], Option[Double])
+
+  /** A star with the staged key types: int country codes, string state
+    * codes, a double visa FK against an int visa key, int modes, double
+    * SAS days on both sides. Each table is one local DataFrame. */
+  private def star(fact: Seq[FactRow], codes: Seq[Option[Int]], states: Seq[Option[String]],
+                   vids: Seq[Option[Int]], transModes: Seq[Option[Int]], days: Seq[Option[Double]])
+      : StagedTables = {
+    val sp = spark
+    import sp.implicits._
+    StagedTables(
+      immigration = fact.toDF("i94res", "i94addr", "i94visa", "i94mode", "arrdate"),
+      visa = vids.toDF("vid"), transMode = transModes.toDF("i94mode"),
+      demographics = states.toDF("State Code"), country = codes.toDF("Code"),
+      calendar = days.toDF("arrival_sasdate"))
+  }
+
+  private val NaN = Double.NaN
+  private val otherNaN = java.lang.Double.longBitsToDouble(0x7ff8000000000001L)
+  private def fk(res: Option[Int] = Some(1), addr: Option[String] = Some("CA"),
+                 visa: Option[Double] = Some(1.0), mode: Option[Int] = Some(1),
+                 day: Option[Double] = Some(20545.0)): FactRow = (res, addr, visa, mode, day)
+  private def some[A](xs: A*): Seq[Option[A]] = xs.map(Some(_))
+  private val codes = some(1, 2, 3); private val states = some("CA", "NY")
+  private val vids = some(1, 2, 3); private val modeKeys = some(1, 2, 3, 9)
+  private val days = some(20545.0, 20546.0)
+  /** Past the optimizer's threshold (10), an IN list becomes an InSet. */
+  private val manyDays = some((1 to 12).map(_ + 30000.0): _*)
+
+  private def orphans(rows: Seq[(String, Long)]): Seq[Long] =
+    rows.collect { case (c, v) if c.startsWith("orphans:") => v }
+
+  test("qualityReport equals the rowCounts ∪ fkIntegrity composition on edge cases and planted inputs") {
+    val emptyFact = star(Nil, codes, states, vids, modeKeys, days)
+    val emptyDims = star(Seq(fk(), fk(Some(4), Some("QA"), Some(NaN), Some(5), Some(-0.0)),
+      fk(None, None, None, None, None), fk(day = Some(0.0))), Nil, Nil, Nil, Nil, Nil)
+    val cases = Seq(
+      "null FKs" -> star(Seq(fk(None, None, None, None, None), fk(),
+        fk(Some(7), Some("QA"), Some(4.0), Some(5), Some(1.0)),
+        fk(Some(7), Some("QA"), Some(4.0), Some(5), Some(1.0)),
+        fk(None, Some("QB"), None, Some(6), None)), codes, states, vids, modeKeys, days),
+      "NaN and ±0.0 FKs" -> star(Seq(fk(visa = Some(-0.0), day = Some(-0.0)),
+        fk(visa = Some(0.0), day = Some(0.0)), fk(visa = Some(NaN), day = Some(NaN)),
+        fk(visa = Some(otherNaN), day = Some(otherNaN)), fk()),
+        codes, states, vids, modeKeys, some(0.0, 20545.0) ++ manyDays),
+      "NaN and ±0.0 PKs" -> star(Seq(fk(visa = Some(0.0), day = Some(0.0)),
+        fk(visa = Some(-0.0), day = Some(-0.0)), fk(day = Some(NaN)), fk(day = Some(otherNaN)),
+        fk(day = Some(1.0))), codes, states, some(0, 1), modeKeys,
+        some(-0.0, NaN, otherNaN) ++ manyDays),
+      "double FK against int PK" -> star(Seq(fk(visa = Some(1.0)), fk(visa = Some(2.5)),
+        fk(visa = Some(3.0)), fk(visa = Some(4.0)), fk(visa = Some(-1.0))),
+        codes, states, vids, modeKeys, days),
+      "duplicate and null PKs" -> star(Seq(fk(), fk(Some(2), Some("NY"), Some(2.0), Some(9)),
+        fk(Some(3), Some("TX"), Some(3.0), Some(3), Some(20546.0))),
+        Seq(Some(1), Some(1), None, Some(2), None), Seq(Some("CA"), Some("CA"), None),
+        Seq(Some(1), Some(1), Some(2), None), Seq(None, Some(1), Some(9), Some(9)),
+        Seq(Some(20545.0), Some(20545.0), None)),
+      "empty dims" -> emptyDims,
+      "empty fact" -> emptyFact
+    ) ++ modes.map { case (mode, compat) => s"planted inputs ($mode)" -> stagedPlanted(mode, compat) }
+
+    def rows(df: DataFrame): Seq[(String, Long)] =
+      df.collect().toSeq.map(r => r.getString(0) -> r.getLong(1))
+    val reports = cases.map { case (name, t) =>
+      val got = CapstonePipeline.qualityReport(spark, t)
+      val want = composedReport(t)
+      assert(got.schema == want.schema, name)
+      assert(rows(got) == rows(want), name)
+      name -> rows(got)
+    }.toMap
+
+    // every key but null and NaN is an orphan: 2 days (20545.0 and ±0.0),
+    // 2 states, 2 modes, 2 codes, 1 visa (1.0)
+    assert(orphans(reports("empty dims")) == Seq(2L, 2L, 2L, 2L, 1L))
+    assert(reports("empty fact").collect { case ("rows:immigration", n) => n } == Seq(0L))
+    assert(orphans(reports("empty fact")) == Seq(0L, 0L, 0L, 0L, 0L))
+    // NaN FKs are not orphans (fkIntegrity's na.drop); ±0.0 is one key
+    assert(orphans(reports("NaN and ±0.0 FKs")) == Seq(0L, 0L, 0L, 0L, 1L))
+    assert(orphans(reports("NaN and ±0.0 PKs")) == Seq(1L, 0L, 0L, 0L, 0L))
+  }
+
+  test("qualityReport launches at most 7 jobs, reads each staged table once, and its collect launches none") {
+    val staged = stagedPlanted("fixed", CompatConfig.fixed)
+    val sc = spark.sparkContext
+    val jobs = new ConcurrentLinkedQueue[(String, Seq[Int])]()
+    val reads = new ConcurrentLinkedQueue[(Int, Long)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")) -> e.stageIds)
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null) reads.add(e.stageId -> e.taskMetrics.inputMetrics.recordsRead)
+    }
+    def inGroup[A](group: String)(body: => A): A = {
+      sc.setJobGroup(group, group)
+      try body finally sc.clearJobGroup()
+    }
+    sc.addSparkListener(listener)
+    val report = try {
+      val df = inGroup("report-call")(CapstonePipeline.qualityReport(spark, staged))
+      val rows = inGroup("report-collect")(df.collect())
+      // the bus delivers in order: once this job is seen, so is every
+      // task of the jobs before it
+      inGroup("report-drained")(sc.parallelize(Seq(1), 1).count())
+      val deadline = System.nanoTime() + 30_000_000_000L
+      while (!jobs.asScala.exists(_._1 == "report-drained") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(jobs.asScala.exists(_._1 == "report-drained"), "listener never saw the drain job")
+      rows.map(r => r.getString(0) -> r.getLong(1)).toMap
+    } finally sc.removeSparkListener(listener)
+
+    def jobsOf(group: String): Int = jobs.asScala.count(_._1 == group)
+    val (callJobs, collectJobs) = (jobsOf("report-call"), jobsOf("report-collect"))
+    assert(callJobs + collectJobs <= 7, s"$callJobs + $collectJobs jobs (qualityReport + collect)")
+    assert(collectJobs == 0, "collecting the report launched jobs")
+    val stages = jobs.asScala.collect { case (g, ids) if g.startsWith("report-c") => ids }.flatten.toSet
+    val recordsRead = reads.asScala.collect { case (s, n) if stages(s) => n }.sum
+    val tableRows = report.collect { case (c, n) if c.startsWith("rows:") => n }.sum
+    assert(tableRows == factRows + 3 + 4 + 4 + 10 + 31)
+    assert(recordsRead == tableRows, s"read $recordsRead records for $tableRows staged rows")
   }
 }
