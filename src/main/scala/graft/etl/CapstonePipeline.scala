@@ -3,7 +3,13 @@ package graft.etl
 import java.nio.file.Paths
 import java.util.concurrent.{Callable, ExecutionException, Executors}
 
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader,
+  ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -78,6 +84,43 @@ object CapstonePipeline {
       .options(Map("sep" -> sep, "header" -> "true", "mode" -> "PERMISSIVE"))
       .csv(path)
 
+  /** `spark.read.parquet(path)` without its schema-inference job. Spark
+    * infers a Parquet schema by reading footers in a one-stage job, even
+    * for a single file. This reads, on the driver, the one footer that
+    * Spark's non-merging inference reads: a `_common_metadata`, else a
+    * `_metadata`, else the first data file by path, where hidden names
+    * (`_`/`.` prefixes, as `_SUCCESS` and `.crc` files) are skipped and
+    * partition directories are descended. The footer is read and
+    * converted as inference does it: `readSchemaFromFooter` keeps Spark's
+    * own row schema from the footer when present, and the converter
+    * applies the session's Parquet confs. Partition discovery
+    * still appends the partition columns. With no file to read (missing
+    * path, glob, empty directory) this is the plain read, so Spark's
+    * errors stay as they are. */
+  private[etl] def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    val summaries = Seq("_common_metadata", "_metadata")
+    def visible(name: String): Boolean = summaries.contains(name) ||
+      !(name.startsWith(".") || name.startsWith("_") && !name.contains("="))
+    def leaves(st: FileStatus): Seq[FileStatus] =
+      if (!st.isDirectory) Seq(st)
+      else fs.listStatus(st.getPath).toSeq.filter(c => visible(c.getPath.getName)).flatMap(leaves)
+    val files = if (fs.exists(root)) leaves(fs.getFileStatus(root)) else Nil
+    files.minByOption { f =>
+      val name = f.getPath.getName
+      (!summaries.contains(name), summaries.indexOf(name), f.getPath.toString)
+    } match {
+      case Some(file) =>
+        val footer = ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(file, conf), SKIP_ROW_GROUPS)
+        val schema = ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, footer),
+          new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+        spark.read.schema(schema).parquet(path)
+      case None => spark.read.parquet(path)
+    }
+  }
+
   /** US-demographics dim (etl.py:102-131): `;`-separated CSV (S2), read
     * with [[DemographicsSchema]] (the reference's casts, P4, happen at
     * read time) → per-city collapse (A1). min() instead of first():
@@ -92,13 +135,13 @@ object CapstonePipeline {
         min(col("Female Population")).as("female_population"),
         min(col("Total Population")).as("total_population"))
 
-  /** Immigration fact (etl.py:143-181): parquet scan → column drops →
-    * null-fill of i94mode → int casts. The reference's dead dedup (B1,
-    * etl.py:158) is kept as a CHECK — [[duplicateAdmnumCount]] — not a
-    * silent drop. */
+  /** Immigration fact (etl.py:143-181): parquet scan ([[readParquet]])
+    * → column drops → null-fill of i94mode → int casts. The reference's
+    * dead dedup (B1, etl.py:158) is kept as a CHECK —
+    * [[duplicateAdmnumCount]] — not a silent drop. */
   def immigrationFact(spark: SparkSession, parquetPath: String,
                       compat: CompatConfig = CompatConfig.fixed): DataFrame = {
-    val raw = spark.read.parquet(parquetPath)
+    val raw = readParquet(spark, parquetPath)
     val highNull  = Seq("visapost", "occup", "entdepu", "insnum", "fltno")
     val unneeded  = Seq("count", "entdepa", "entdepd", "matflag", "dtaddto", "biryear", "admnum")
     val fillValue = if (compat.fillI94ModeWithZero) 0 else 9
@@ -115,7 +158,7 @@ object CapstonePipeline {
     * since grouping also puts nulls in one group and normalizes NaN and
     * -0.0. */
   def duplicateAdmnumCount(spark: SparkSession, parquetPath: String): Long =
-    spark.read.parquet(parquetPath)
+    readParquet(spark, parquetPath)
       .groupBy("admnum").count()
       .agg(coalesce(sum(col("count") - 1), lit(0L)))
       .head().getLong(0)
@@ -253,9 +296,11 @@ object CapstonePipeline {
     StagedTables(fact, visa, transMode, demo, country, calendar)
   }
 
-  /** read_data (etl.py:316-334): reopen the six staged tables. */
+  /** read_data (etl.py:316-334): reopen the six staged tables. Each
+    * schema comes from one footer read on the driver ([[readParquet]]),
+    * so this launches no Spark job. */
   def readData(spark: SparkSession, root: String): StagedTables = {
-    def r(leaf: String) = spark.read.parquet(join(root, leaf))
+    def r(leaf: String) = readParquet(spark, join(root, leaf))
     StagedTables(
       immigration = r("immigration.parquet"),
       visa = r("i94visa.parquet"),
@@ -267,9 +312,10 @@ object CapstonePipeline {
 
   /** The notebook's quality gate (NB cells 42-43) with fixed semantics:
     * row counts + FK orphan counts per star edge, as `(check, value)`
-    * rows sorted by `check`. `Checks.starIntegrity` reads each dim once
-    * and the fact in a single aggregate, so this runs its jobs when
-    * called and returns a local frame; collecting it launches none.
+    * rows sorted by `check`. `Checks.starIntegrity` reads all five dims'
+    * key columns in one job and the fact in a single aggregate, so this
+    * runs its jobs when called and returns a local frame; collecting it
+    * launches none.
     * Driver memory: the five dims' key columns plus each edge's orphan
     * keys. */
   def qualityReport(spark: SparkSession, t: StagedTables): DataFrame =

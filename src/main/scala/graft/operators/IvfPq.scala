@@ -157,8 +157,6 @@ object IvfPq {
     * evaluated once per (query, candidate) instead of once per config. */
   def adcScan(encoded: DataFrame, queries: DataFrame, idCol: String,
               vecCol: String, model: Model, nprobe: Int): DataFrame = {
-    val m = model.pq.m
-    val subDim = model.pq.subDim
     val probe = queries
       .select(col(idCol).as("query_id"),
         col(vecCol).cast("array<double>").as("qv"))

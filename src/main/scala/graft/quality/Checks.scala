@@ -2,7 +2,7 @@ package graft.quality
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -51,7 +51,7 @@ object Checks {
   }
 
   /** Row-count per table (reference `data_exists`): (table_name, n_rows). */
-  def rowCounts(spark: SparkSession, tables: Seq[(String, DataFrame)]): DataFrame = {
+  def rowCounts(tables: Seq[(String, DataFrame)]): DataFrame = {
     val counted = tables.map { case (name, df) =>
       df.agg(count(lit(1)).as("n_rows")).select(lit(name).as("table_name"), col("n_rows"))
     }
@@ -107,9 +107,11 @@ object Checks {
                             dim: DataFrame, pk: String)
 
   /** Row counts and FK orphan counts of a star schema, reading each table
-    * once. Each dim's key column is collected to the driver (one job per
-    * dim); the array gives the dim's row count, and its non-null values
-    * the key set. The fact is then scanned by ONE aggregate: `count(1)`
+    * once. All dims' key columns are collected to the driver in ONE job:
+    * a union of one projection per edge, `(edge, k0..kn)`, where `k_i`
+    * holds edge i's key and the other columns are typed nulls. Each
+    * edge's rows give its dim's row count, and their non-null keys the
+    * key set. The fact is then scanned by ONE aggregate: `count(1)`
     * plus, per edge, `size(collect_set(when(NOT fk IN keys, fk)))`.
     * Null and NaN FKs and matched keys become null, which `collect_set`
     * drops, so each set holds only that edge's orphan keys. The semantics
@@ -128,8 +130,15 @@ object Checks {
   def starIntegrity(factName: String, fact: DataFrame, edges: Seq[StarEdge]): DataFrame = {
     require(edges.map(_.dimName).distinct.size == edges.size,
       "starIntegrity takes one edge per dim")
-    val keyed = edges.map { e =>
-      val keys = e.dim.select(col(e.pk)).collect().map(_.get(0))
+    val types = edges.map(e => e.dim.select(col(e.pk)).schema.head.dataType)
+    val byEdge = edges.zipWithIndex.map { case (e, i) =>
+      val ks = types.zipWithIndex.map { case (t, j) =>
+        (if (j == i) col(e.pk) else lit(null).cast(t)).as(s"k$j")
+      }
+      e.dim.select(lit(i).as("edge") +: ks: _*)
+    }.reduceOption(_.union(_)).fold(Map.empty[Int, Array[Row]])(_.collect().groupBy(_.getInt(0)))
+    val keyed = edges.zipWithIndex.map { case (e, i) =>
+      val keys = byEdge.getOrElse(i, Array.empty[Row]).map(_.get(i + 1))
       (e, keys.length.toLong, keys.filter(_ != null).distinct.toSeq)
     }
     val orphanSets = keyed.map { case (e, _, keys) =>

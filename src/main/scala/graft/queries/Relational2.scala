@@ -197,7 +197,7 @@ object Relational2 extends QueryPack {
     * 10 final rows reach the driver). */
   private def q17(s: SparkSession, dir: String): DataFrame = {
     val tb = Tables(s, dir)
-    Checks.rowCounts(s, Tables.names.map(n => n -> tb(n)))
+    Checks.rowCounts(Tables.names.map(n => n -> tb(n)))
   }
 
   private val q17Sql = Tables.names.sorted

@@ -8,7 +8,7 @@ import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -286,7 +286,7 @@ class CapstonePipelineSpec extends GraftTestBase {
   /** The oracle of the differential test below: the same report
     * composed from `rowCounts` ∪ `fkIntegrity`, sorted by check. */
   private def composedReport(t: StagedTables): DataFrame = {
-    val counts = Checks.rowCounts(spark, t.all)
+    val counts = Checks.rowCounts(t.all)
       .select(concat(lit("rows:"), col("table_name")).as("check"),
               col("n_rows").as("value"))
     val fks = Checks.fkIntegrity(Seq(
@@ -381,43 +381,130 @@ class CapstonePipelineSpec extends GraftTestBase {
     assert(orphans(reports("NaN and ±0.0 PKs")) == Seq(1L, 0L, 0L, 0L, 0L))
   }
 
-  test("qualityReport launches at most 7 jobs, reads each staged table once, and its collect launches none") {
-    val staged = stagedPlanted("fixed", CompatConfig.fixed)
+  /** `body`'s result, the jobs it started and the records their tasks
+    * read. `body` runs in a job group of its own, which the threads it
+    * creates inherit. A one-task job in another group follows; once the
+    * listener has seen it, it has seen every job and task started before
+    * it (the bus delivers in order). */
+  private def traced[A](body: => A): (A, Seq[SparkListenerJobStart], Long) = {
     val sc = spark.sparkContext
-    val jobs = new ConcurrentLinkedQueue[(String, Seq[Int])]()
+    val group = s"traced-${System.nanoTime()}"
+    val jobs = new ConcurrentLinkedQueue[SparkListenerJobStart]()
     val reads = new ConcurrentLinkedQueue[(Int, Long)]()
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")) -> e.stageIds)
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.add(e)
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
         if (e.taskMetrics != null) reads.add(e.stageId -> e.taskMetrics.inputMetrics.recordsRead)
     }
-    def inGroup[A](group: String)(body: => A): A = {
-      sc.setJobGroup(group, group)
-      try body finally sc.clearJobGroup()
+    def inGroup[B](g: String)(b: => B): B = {
+      sc.setJobGroup(g, g)
+      try b finally sc.clearJobGroup()
     }
+    def groupOf(j: SparkListenerJobStart) = j.properties.getProperty("spark.jobGroup.id")
     sc.addSparkListener(listener)
-    val report = try {
-      val df = inGroup("report-call")(CapstonePipeline.qualityReport(spark, staged))
-      val rows = inGroup("report-collect")(df.collect())
-      // the bus delivers in order: once this job is seen, so is every
-      // task of the jobs before it
-      inGroup("report-drained")(sc.parallelize(Seq(1), 1).count())
+    try {
+      val result = inGroup(group)(body)
+      inGroup(s"$group-drained")(sc.parallelize(Seq(1), 1).count())
       val deadline = System.nanoTime() + 30_000_000_000L
-      while (!jobs.asScala.exists(_._1 == "report-drained") && System.nanoTime() < deadline)
+      while (!jobs.asScala.exists(groupOf(_) == s"$group-drained") && System.nanoTime() < deadline)
         Thread.sleep(20)
-      assert(jobs.asScala.exists(_._1 == "report-drained"), "listener never saw the drain job")
-      rows.map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(jobs.asScala.exists(groupOf(_) == s"$group-drained"), "listener never saw the drain job")
+      val mine = jobs.asScala.toSeq.filter(groupOf(_) == group)
+      val stages = mine.flatMap(_.stageIds).toSet
+      (result, mine, reads.asScala.collect { case (st, n) if stages(st) => n }.sum)
     } finally sc.removeSparkListener(listener)
+  }
 
-    def jobsOf(group: String): Int = jobs.asScala.count(_._1 == group)
-    val (callJobs, collectJobs) = (jobsOf("report-call"), jobsOf("report-collect"))
-    assert(callJobs + collectJobs <= 7, s"$callJobs + $collectJobs jobs (qualityReport + collect)")
-    assert(collectJobs == 0, "collecting the report launched jobs")
-    val stages = jobs.asScala.collect { case (g, ids) if g.startsWith("report-c") => ids }.flatten.toSet
-    val recordsRead = reads.asScala.collect { case (s, n) if stages(s) => n }.sum
+  test("qualityReport launches at most 3 jobs, reads each staged table once, and its collect launches none") {
+    val staged = stagedPlanted("fixed", CompatConfig.fixed)
+    val (df, callJobs, callRead) = traced(CapstonePipeline.qualityReport(spark, staged))
+    val (rows, collectJobs, collectRead) = traced(df.collect())
+    val report = rows.map(r => r.getString(0) -> r.getLong(1)).toMap
+    // one job for the five dims' keys, two for the fact aggregate (AQE
+    // runs its map stage as a job of its own)
+    assert(callJobs.size + collectJobs.size <= 3,
+      s"${callJobs.size} + ${collectJobs.size} jobs (qualityReport + collect)")
+    assert(collectJobs.size == 0, "collecting the report launched jobs")
     val tableRows = report.collect { case (c, n) if c.startsWith("rows:") => n }.sum
     assert(tableRows == factRows + 3 + 4 + 4 + 10 + 31)
-    assert(recordsRead == tableRows, s"read $recordsRead records for $tableRows staged rows")
+    assert(callRead + collectRead == tableRows,
+      s"read ${callRead + collectRead} records for $tableRows staged rows")
+  }
+
+  // ------------------------------------------------ footer-read schemas
+
+  /** Spark's Parquet schema inference: a one-stage
+    * `parallelize(...).mapPartitions(...)` job, every RDD of which the
+    * read call itself created. */
+  private def isFooterJob(j: SparkListenerJobStart): Boolean = {
+    val rdds = j.stageInfos.flatMap(_.rddInfos)
+    rdds.nonEmpty && rdds.forall(r =>
+      Set("ParallelCollectionRDD", "MapPartitionsRDD")(r.name) && r.callSite.startsWith("parquet at"))
+  }
+
+  test("readData launches no job; duplicateAdmnumCount and run launch no footer job") {
+    // the footer job is what a plain read launches
+    val (_, plain, _) = traced(spark.read.parquet(input("sas_data")))
+    assert((plain.size, plain.count(isFooterJob)) == (1, 1))
+
+    val out = Files.createTempDirectory("graft_capstone_jobs").toString
+    val (_, dupJobs, _) = traced(CapstonePipeline.duplicateAdmnumCount(spark, input("sas_data")))
+    val (_, runJobs, _) = traced(CapstonePipeline.run(spark, dataRoot.toString, out))
+    val (_, readJobs, _) = traced(CapstonePipeline.readData(spark, out))
+    assert(dupJobs.size >= 1 && dupJobs.count(isFooterJob) == 0)
+    assert(runJobs.size >= 6 && runJobs.count(isFooterJob) == 0)
+    assert(readJobs.size == 0)
+  }
+
+  test("readParquet gives the schema and rows of Spark's inference, and its errors") {
+    def dir(prefix: String): Path = Files.createTempDirectory(prefix)
+    val partitioned = dir("graft_capstone_partitioned").toString
+    CapstonePipeline.run(spark, dataRoot.toString, partitioned, partitionFactByMonth = true)
+    // inference reads one footer: a summary file if there is one, else the
+    // first part file by path. Both layouts below hold a part file of
+    // another schema that sorts before every other file, summaries too
+    // ("P=0/" before "_common_metadata").
+    val narrowDir = dir("graft_parquet_narrow").resolve("t")
+    spark.range(1).select(id.as("a")).coalesce(1).write.parquet(narrowDir.toString)
+    val narrow = Files.list(narrowDir).iterator.asScala.find(_.toString.endsWith(".parquet")).get
+    def wide = spark.range(4).select(id.as("a"), id.cast(StringType).as("b"), (id % 2).as("P"))
+    val mixed = dir("graft_parquet_mixed").resolve("t")
+    wide.write.parquet(mixed.toString)
+    Files.copy(narrow, mixed.resolve("part-0.parquet"))
+    val summarized = dir("graft_parquet_summary").resolve("t")
+    wide.write.partitionBy("P").option("parquet.summary.metadata.level", "ALL")
+      .parquet(summarized.toString)
+    assert(Files.exists(summarized.resolve("_common_metadata")))
+    Files.copy(narrow, summarized.resolve("P=0").resolve("part-0.parquet"))
+    assert(spark.read.parquet(mixed.toString).columns.toSeq == Seq("a"))
+    assert(spark.read.parquet(summarized.toString).columns.toSeq == Seq("a", "b", "P"))
+    val staged = modes.flatMap { case (mode, compat) =>
+      stagedPlanted(mode, compat)
+      Files.list(Path.of(stagedRoots(mode))).iterator.asScala.map(_.toString).toSeq.sorted
+    }
+    val names = Files.list(Path.of(staged.head)).iterator.asScala.map(_.getFileName.toString).toSeq
+    assert(names.contains("_SUCCESS") && names.exists(n => n.startsWith(".") && n.endsWith(".crc")),
+      s"no _SUCCESS or .crc file among $names")
+
+    val paths = Seq(input("sas_data"), s"$partitioned/immigration.parquet", mixed.toString,
+      summarized.toString) ++ staged
+    assert(paths.size == 4 + 2 * 6)
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    paths.foreach { p =>
+      val (declared, jobs, _) = traced(CapstonePipeline.readParquet(spark, p))
+      val inferred = spark.read.parquet(p)
+      assert(jobs.size == 0, p)
+      assert(declared.schema == inferred.schema, p)
+      assert(rows(declared) == rows(inferred), p)
+    }
+    assert(CapstonePipeline.readParquet(spark, s"$partitioned/immigration.parquet")
+      .columns.takeRight(2).toSeq == Seq("i94yr", "i94mon"))
+
+    Seq(dir("graft_parquet_missing").resolve("absent").toString -> "PATH_NOT_FOUND",
+        dir("graft_parquet_empty").toString -> "UNABLE_TO_INFER_SCHEMA").foreach { case (p, condition) =>
+      val errors = Seq(intercept[AnalysisException](CapstonePipeline.readParquet(spark, p)),
+                       intercept[AnalysisException](spark.read.parquet(p)))
+      assert(errors.map(_.getCondition) == Seq(condition, condition), p)
+    }
   }
 }

@@ -56,7 +56,7 @@ class ChecksSpec extends GraftTestBase {
   }
 
   test("rowCounts reports every table") {
-    val out = Checks.rowCounts(spark, Seq(
+    val out = Checks.rowCounts(Seq(
         "a" -> Seq(1, 2, 3).toDF("x"), "b" -> Seq.empty[Int].toDF("x")))
       .collect().map(r => r.getString(0) -> r.getAs[Long]("n_rows")).toMap
     assert(out == Map("a" -> 3L, "b" -> 0L))
