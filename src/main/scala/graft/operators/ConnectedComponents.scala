@@ -25,8 +25,8 @@ import org.apache.spark.sql.functions._
   *      across partition boundaries. Repeat while the edge set is
   *      still large; each round contracts by the local clustering
   *      factor and the round count is O(log diameter).
-  *   3. When the surviving star forest is small (≤ `localFinishEdges`,
-  *      default 2M edges ≈ 32 MB — near-dup graphs contract far below
+  *   3. When the surviving star forest is small (≤ `LocalFinishEdges`,
+  *      2M edges ≈ 32 MB — near-dup graphs contract far below
   *      this because components are tiny relative to the corpus), one
   *      single-task union-find labels every remaining vertex exactly.
   *
@@ -64,23 +64,14 @@ object ConnectedComponents {
     }
   }
 
-  /** Local-path ceiling: a normalized distinct pair relation at or
-    * under this many rows is collected (take(max+1) — one bounded
-    * CollectLimit over the already-materialized relation) and labeled
-    * by ONE driver-side union-find instead of the count + contraction
-    * + single-task-finish + vertex-join chain — the [[Louvain]]/
-    * [[PageRank]] cost dispatch applied to the cluster step every
-    * near-dup pipeline ends in. All-Long min-id labels: bit-identical
-    * to the distributed path by construction (pinned in
-    * ConnectedComponentsSpec). 0 disables local execution. */
-  private def maxLocalEdges(df: DataFrame): Int = df.sparkSession.conf
-    .get("spark.graft.cc.localMaxEdges", (1 << 20).toString).toInt
+  /** Star-forest size at or under which the contraction loop stops and
+    * one single-task union-find finishes (2M edges ≈ 32 MB). */
+  private val LocalFinishEdges = 2000000L
 
   /** @return (id, component) — every vertex appearing in `edges`,
     *         labeled with the min vertex id reachable from it. */
   def components(edges: DataFrame, srcCol: String, dstCol: String,
-                 maxIters: Int = 20,
-                 localFinishEdges: Long = 2000000L): DataFrame = {
+                 maxIters: Int = 20): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
 
@@ -96,11 +87,16 @@ object ConnectedComponents {
       .distinct()
       .localCheckpoint()
 
-    val maxLocal = maxLocalEdges(edges)
-    if (maxLocal > 0) {
-      val taken = e1.take(maxLocal + 1)
-      if (taken.length <= maxLocal &&
-          !taken.exists(r => r.isNullAt(0) || r.isNullAt(1))) {
+    // Local path: a pair relation under the LocalProbe edge ceiling
+    // (one bounded take over the already-materialized relation; no node
+    // ceiling) is labeled by ONE driver-side union-find instead of the
+    // count + contraction + single-task-finish + vertex-join chain — the
+    // cost dispatch of the other graph operators applied to the cluster
+    // step every near-dup pipeline ends in. All-Long min-id labels:
+    // bit-identical to the distributed path by construction (pinned in
+    // ConnectedComponentsSpec).
+    LocalProbe.collect(e1, LocalProbe.Pairs) match {
+      case Some(g) =>
         // one union-find over the collected pairs — same min-id labels
         // as contraction + finish (the label is a pure function of the
         // graph: union by min root, find to the root)
@@ -113,8 +109,7 @@ object ConnectedComponents {
           r
         }
         val verts = mutable.TreeSet.empty[Long]
-        taken.foreach { r =>
-          val a = r.getLong(0); val b = r.getLong(1)
+        g.pairs.foreach { case (a, b) =>
           verts += a; verts += b
           if (a != b) {
             val ra = find(a); val rb = find(b)
@@ -122,7 +117,7 @@ object ConnectedComponents {
           }
         }
         return localResult(spark, verts.toSeq.map(v => (v, find(v))))
-      }
+      case None => ()
     }
 
     var e: Dataset[(Long, Long)] = e1
@@ -131,20 +126,20 @@ object ConnectedComponents {
 
     var n = e.count()
     var i = 0
-    while (n > localFinishEdges && i < maxIters) {
+    while (n > LocalFinishEdges && i < maxIters) {
       e = e.mapPartitions(contract)
         .repartition(col("_1"))
         .localCheckpoint() // truncate lineage; swap for checkpoint() on a real cluster
       n = e.count()
       i += 1
     }
-    require(n <= localFinishEdges,
-      s"star forest still has $n edges after $i contraction rounds — " +
-        s"raise localFinishEdges or maxIters")
+    require(n <= LocalFinishEdges,
+      s"star forest still has $n edges after $i contraction rounds, over " +
+        s"the $LocalFinishEdges-edge single-task finish — raise maxIters")
 
     // Bounded single-task finish over the contracted star forest: the
     // full remaining graph fits one task by construction (≤
-    // localFinishEdges pairs), and union-find labels every surviving
+    // LocalFinishEdges pairs), and union-find labels every surviving
     // vertex with its exact min-reachable root.
     val labeled = e.coalesce(1).mapPartitions { it =>
       val parent = mutable.LongMap.empty[Long]

@@ -56,18 +56,15 @@ object Hits {
     * sorted (src, dst) edge order — deterministic — and computes the
     * identical coalesce-0 / L∞-normalize math; scores agree with the
     * distributed path to float summation order (callers round, q363 at
-    * 6 dp). Default 0 = always distributed. An over-threshold count
-    * falls through to the distributed path unchanged. */
+    * 6 dp). Default 0 = always distributed. The probe is one bounded
+    * take of the ordered distinct edges ([[LocalProbe.takeBounded]]); an
+    * over-threshold graph falls through to the distributed path
+    * unchanged. */
   def run(edges: DataFrame, iters: Int, localThreshold: Long = 0L): DataFrame = {
-    if (localThreshold > 0L) {
-      val eSmall = edges.select(col("src"), col("dst")).distinct()
-        .orderBy("src", "dst")
-        .limit(math.min(localThreshold + 1L, Int.MaxValue.toLong).toInt)
-        .localCheckpoint()
-      if (eSmall.count() <= localThreshold)
-        return runLocal(eSmall, edges.schema("src").dataType, iters)
-      // else: fall through; the distributed path re-derives its own
-      // cached distinct edge frame below (eSmall was capped by limit)
+    val ordered = edges.select(col("src"), col("dst")).distinct().orderBy("src", "dst")
+    LocalProbe.takeBounded(ordered, localThreshold.max(0L).min(Int.MaxValue - 1L).toInt) match {
+      case Some(rows) => return runLocal(ordered, rows, iters)
+      case None => ()
     }
     val e = edges.select(col("src"), col("dst")).distinct().cache()
     require(!e.isEmpty,
@@ -112,14 +109,15 @@ object Hits {
     out
   }
 
-  /** Driver-side HITS over a collected (bounded) edge list — same
+  /** Driver-side HITS over the collected (bounded) edge list — same
     * update math as the distributed loop, accumulation in sorted edge
     * order. Node identity is kept as the untyped collected value (the
     * output column re-declares the caller's src type). */
-  private def runLocal(eSmall: DataFrame, nodeType: org.apache.spark.sql.types.DataType,
+  private def runLocal(ordered: DataFrame, taken: Array[org.apache.spark.sql.Row],
                        iters: Int): DataFrame = {
-    val spark = eSmall.sparkSession
-    val edgeRows = eSmall.collect().map(r => (r.get(0), r.get(1)))
+    val spark = ordered.sparkSession
+    val nodeType = ordered.schema("src").dataType
+    val edgeRows = taken.map(r => (r.get(0), r.get(1)))
     require(edgeRows.nonEmpty,
       "Hits.run needs a non-empty edge set (no max to normalize by)")
     // insertion-ordered distinct node list (sorted edge order → stable)

@@ -5,7 +5,7 @@ import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.{StructField, StructType}
 
 /** Synchronous weighted label propagation (community detection) over
   * an edge DataFrame (src, dst, w) — the fourth member of the
@@ -64,11 +64,11 @@ object LabelPropagation {
     // pattern): the symmetrize+aggregate above is the at-scale work
     // and stays distributed; the label loop costs a broadcast join,
     // an aggregate and a window PER ROUND — pure scheduling overhead
-    // on a few-thousand-node graph. Under the conf ceilings the exact
-    // all-integer argmax replays on the driver; oversized, null,
+    // on a few-thousand-node graph. Under the LocalProbe ceilings the
+    // exact all-integer argmax replays on the driver; oversized, null,
     // non-integral-keyed or non-Long-weight graphs stay distributed.
-    localSym(sym) match {
-      case Some((es, nodeF)) => localRun(sym, es, iters, nodeF)
+    LocalProbe.collect(sym, LocalProbe.Edges) match {
+      case Some(g) => localRun(sym, g.triples, iters)
       case None => runDistributed(sym, iters, checkpointEvery)
     }
   }
@@ -102,42 +102,13 @@ object LabelPropagation {
     labels
   }
 
-  private def maxLocalNodes(df: DataFrame): Int = df.sparkSession.conf
-    .get("spark.graft.labelprop.localMaxNodes", "4096").toInt
-  private def maxLocalEdges(df: DataFrame): Int = df.sparkSession.conf
-    .get("spark.graft.labelprop.localMaxEdges", (1 << 20).toString).toInt
-
-  /** Collect the symmetrized (src, dst, w) relation under the local
-    * ceilings: integral equal-typed endpoints, LongType weights (count
-    * sums), no nulls. One bounded CollectLimit job over the already-
-    * checkpointed frame. */
-  private def localSym(sym: DataFrame)
-      : Option[(Array[(Long, Long, Long)], StructField)] = {
-    val fs = sym.schema.fields
-    if (!LocalProbe.isIntegral(fs(0).dataType) ||
-        fs(0).dataType != fs(1).dataType ||
-        fs(2).dataType != LongType) return None
-    LocalProbe.takeBounded(sym, maxLocalEdges(sym)).flatMap { taken =>
-      if (taken.exists(r => r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2)))
-        None
-      else {
-        val rows = taken.map(r => (LocalProbe.longAt(r, 0),
-          LocalProbe.longAt(r, 1), r.getLong(2)))
-        val nodes = mutable.HashSet.empty[Long]
-        rows.foreach { t => nodes += t._1; nodes += t._2 }
-        if (nodes.size > maxLocalNodes(sym)) None
-        else Some((rows,
-          StructField("node", fs(0).dataType, fs(0).nullable)))
-      }
-    }
-  }
-
   /** The exact local replay of the distributed loop: per round, total
     * neighbor-label weight per (node, label), adopt the max with ties
     * to the smallest label; nodes with no scored row keep their label.
     * All-Long arithmetic — bit-identical to the distributed rounds. */
   private def localRun(sym: DataFrame, es: Array[(Long, Long, Long)],
-                       iters: Int, nodeF: StructField): DataFrame = {
+                       iters: Int): DataFrame = {
+    val nodeF = sym.schema.fields(0)
     val nodes = es.map(_._1).distinct.sorted
     val labels = mutable.HashMap.empty[Long, Long]
     nodes.foreach(n => labels.update(n, n))

@@ -52,7 +52,7 @@ import org.apache.spark.sql.types._
   */
 object Louvain {
 
-  import LocalProbe.{fromLong, isIntegral}
+  import LocalProbe.fromLong
 
   /** Materialize AND reset plan statistics. localCheckpoint alone cuts
     * the lineage but PROPAGATES the checkpointed plan's sizeInBytes —
@@ -94,7 +94,7 @@ object Louvain {
     require(gammaNum > 0 && gammaDen > 0, "γ must be a positive rational")
     val e = edges.select(col(srcCol).as("i"), col(dstCol).as("j"),
       col(wCol).cast("long").as("w"))
-    collectSmallGraph(e) match {
+    localGraph(e) match {
       case Some(le) =>
         val comm = localMoves(le, rounds, gammaNum, gammaDen)
         val iF = e.schema.fields(0)
@@ -200,8 +200,8 @@ object Louvain {
                wCol: String, comm: DataFrame): DataFrame = {
     val e0 = edges.select(col(srcCol).as("i"), col(dstCol).as("j"),
       col(wCol).cast("long").as("w"))
-    (collectSmallComm(comm), collectSmallGraph(e0)) match {
-      case (Some((cm, _)), Some(le)) =>
+    (localComm(comm), localGraph(e0)) match {
+      case (Some(cm), Some(le)) =>
         val cT = comm.schema.fields(
           comm.schema.fieldIndex("community")).dataType
         val contracted = localContract(le, cm).sortBy(t => (t._1, t._2))
@@ -238,7 +238,7 @@ object Louvain {
     require(levels >= 1)
     val e0 = edges.select(col(srcCol).as("i"), col(dstCol).as("j"),
       col(wCol).cast("long").as("w"))
-    collectSmallGraph(e0) match {
+    localGraph(e0) match {
       case Some(le) =>
         var eArr = le
         var mapping: Map[Long, Long] = null
@@ -297,7 +297,7 @@ object Louvain {
     require(levels >= 1)
     val e0 = edges.select(col(srcCol).as("i"), col(dstCol).as("j"),
       col(wCol).cast("long").as("w"))
-    collectSmallGraph(e0) match {
+    localGraph(e0) match {
       case Some(le) =>
         var eArr = le
         var mapping: Map[Long, Long] = null
@@ -364,13 +364,14 @@ object Louvain {
     * their community) become their own singleton. */
   def refine(edges: DataFrame, srcCol: String, dstCol: String,
              comm: DataFrame): DataFrame = {
-    (collectSmallComm(comm), collectSmallPairs(
-        edges.select(col(srcCol).as("i"), col(dstCol).as("j")))) match {
-      case (Some((cm, idF)), Some(pairs)) =>
-        val refined = localRefine(pairs, cm)
+    (localComm(comm), LocalProbe.collect(
+        edges.select(col(srcCol).as("i"), col(dstCol).as("j")),
+        LocalProbe.Pairs, sameType = false)) match {
+      case (Some(cm), Some(pairs)) =>
+        val refined = localRefine(pairs.pairs, cm)
         // every comm id, fragment labels (LongType, like the CC pass)
         localResult(comm.sparkSession,
-          cm.keys.toSeq.sorted.map(id => id -> refined(id)), idF, LongType)
+          cm.keys.toSeq.sorted.map(id => id -> refined(id)), comm.schema("id"), LongType)
       case _ => refineDistributed(edges, srcCol, dstCol, comm)
     }
   }
@@ -401,19 +402,13 @@ object Louvain {
   // nation trade graph, or any contracted level). Guide §1.2 step 1 +
   // §2 (scale-adaptive, not constant): like Spark's broadcast
   // threshold and RowIndexer's window dispatch, every entry point
-  // probes the input once and, under the conf ceilings below, runs
+  // probes the input once and, under the LocalProbe ceilings, runs
   // the EXACT same move schedule on the driver — same integer gains,
   // same (g desc, b asc) per-node argmax, same (−g, i, b)
   // locally-dominant rule, same early exit — producing the identical
   // (id, community) relation as a LocalRelation. Inputs that exceed
   // the ceilings, carry nulls, non-integral id types, or duplicate
   // self-loop rows take the distributed path unchanged.
-
-  private def maxLocalNodes(df: DataFrame): Int = df.sparkSession.conf
-    .get("spark.graft.louvain.localMaxNodes", "4096").toInt
-  private def maxLocalEdges(df: DataFrame): Int = df.sparkSession.conf
-    .get("spark.graft.louvain.localMaxEdges", (1 << 20).toString).toInt
-
 
   /** (id, community) rows → LocalRelation with the id column's
     * name/type taken from `idField` and the community column typed
@@ -429,77 +424,27 @@ object Louvain {
     spark.createDataFrame(java.util.Arrays.asList(out: _*), schema)
   }
 
-  /** Collect an (i, j, w-long) edge relation when it fits the local
-    * ceilings: ≤ maxLocalEdges rows (probed with take(max+1) — one
-    * bounded CollectLimit job; a corpus-sized relation stops at the
-    * cap), ≤ maxLocalNodes distinct sources, integral id types, no
-    * nulls, no duplicate self-loop rows (the distributed selfw join
-    * would multiply candidate rows on those — never legitimate input,
-    * but the fallback preserves whatever the distributed plan does). */
-  private def collectSmallGraph(e: DataFrame)
-      : Option[Array[(Long, Long, Long)]] = {
-    val maxE = maxLocalEdges(e); val maxN = maxLocalNodes(e)
-    if (maxE <= 0 || maxN <= 0) return None
-    val fs = e.schema.fields
-    if (!isIntegral(fs(0).dataType) || !isIntegral(fs(1).dataType))
-      return None
-    val taken = e.take(maxE + 1)
-    if (taken.length > maxE) return None
-    if (taken.exists(r => r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2)))
-      return None
-    val rows = taken.map { r =>
-      (r.get(0).asInstanceOf[Number].longValue,
-       r.get(1).asInstanceOf[Number].longValue, r.getLong(2))
-    }
-    val nodes = mutable.HashSet.empty[Long]
-    rows.foreach(t => nodes += t._1)
-    if (nodes.size > maxN) return None
-    val selfSeen = mutable.HashSet.empty[Long]
-    rows.foreach { case (i, j, _) =>
-      if (i == j && !selfSeen.add(i)) return None
-    }
-    Some(rows)
-  }
+  /** The (i, j, w-long) edge relation under the local ceilings (its
+    * distinct endpoints are its distinct sources under the both-directions
+    * input contract), unless a self-loop row repeats (the distributed selfw join would multiply
+    * candidate rows on those — never legitimate input, but the fallback
+    * preserves whatever the distributed plan does). */
+  private def localGraph(e: DataFrame): Option[Array[(Long, Long, Long)]] =
+    LocalProbe.collect(e, LocalProbe.Edges, sameType = false).map(_.triples)
+      .filter { rows =>
+        val selfSeen = mutable.HashSet.empty[Long]
+        rows.forall { case (i, j, _) => i != j || selfSeen.add(i) }
+      }
 
-  /** Collect an (i, j) pair relation under the edge ceiling (the
-    * refine edge set; null endpoints fall back — the distributed
-    * equi-joins drop them, handled exactly there). */
-  private def collectSmallPairs(e: DataFrame)
-      : Option[Array[(Long, Long)]] = {
-    val maxE = maxLocalEdges(e)
-    if (maxE <= 0) return None
-    val fs = e.schema.fields
-    if (!isIntegral(fs(0).dataType) || !isIntegral(fs(1).dataType))
-      return None
-    val taken = e.take(maxE + 1)
-    if (taken.length > maxE) return None
-    if (taken.exists(r => r.isNullAt(0) || r.isNullAt(1))) return None
-    Some(taken.map(r => (r.get(0).asInstanceOf[Number].longValue,
-      r.get(1).asInstanceOf[Number].longValue)))
-  }
-
-  /** Collect an (id, community) relation when it fits maxLocalNodes:
-    * integral types, no nulls, unique ids (duplicates would multiply
-    * join rows — fall back to whatever the distributed plan does).
-    * Returns the id→community map plus the id field for the output
-    * schema. */
-  private def collectSmallComm(comm: DataFrame)
-      : Option[(Map[Long, Long], StructField)] = {
-    val maxN = maxLocalNodes(comm)
-    if (maxN <= 0) return None
-    val idIdx = comm.schema.fieldIndex("id")
-    val cIdx = comm.schema.fieldIndex("community")
-    val idF = comm.schema.fields(idIdx)
-    if (!isIntegral(idF.dataType) ||
-        !isIntegral(comm.schema.fields(cIdx).dataType)) return None
-    val taken = comm.select(col("id"), col("community")).take(maxN + 1)
-    if (taken.length > maxN) return None
-    if (taken.exists(r => r.isNullAt(0) || r.isNullAt(1))) return None
-    val m = taken.map(r => r.get(0).asInstanceOf[Number].longValue ->
-      r.get(1).asInstanceOf[Number].longValue).toMap
-    if (m.size != taken.length) return None // duplicate ids
-    Some((m, idF))
-  }
+  /** The (id, community) relation as an id → community map under the
+    * node ceiling, unless an id repeats (duplicates would multiply join
+    * rows — fall back to whatever the distributed plan does). */
+  private def localComm(comm: DataFrame): Option[Map[Long, Long]] =
+    LocalProbe.collect(comm.select(col("id"), col("community")),
+        LocalProbe.Nodes, sameType = false)
+      .map(_.pairs)
+      .filter(ps => ps.iterator.map(_._1).distinct.size == ps.length)
+      .map(_.toMap)
 
   /** The EXACT local replay of [[clusterDistributed]]'s fixed-round
     * loop: per round wic/dc aggregates, integer gains, per-node best

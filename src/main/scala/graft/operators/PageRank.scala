@@ -2,7 +2,7 @@ package graft.operators
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -55,10 +55,9 @@ object PageRank {
     * checkpoint cadence. */
   def run(edges: DataFrame, iters: Int, damping: Double = 0.85): DataFrame = {
     val eDistinct = edges.select(col("src"), col("dst")).distinct()
-    collectSmall(eDistinct, withWeight = false) match {
-      case Some((es, dec, nodeF)) =>
-        val rank = localLoop(es, iters, damping, tp = null)
-        localRanks(eDistinct.sparkSession, rank, dec, nodeF)
+    LocalProbe.collect(eDistinct, LocalProbe.Edges, strings = true) match {
+      case Some(g) =>
+        localRanks(eDistinct, localLoop(weighted(g), iters, damping, tp = null), g.decode)
       case None => runDistributed(eDistinct, iters, damping)
     }
   }
@@ -110,24 +109,20 @@ object PageRank {
     val eDistinct = edges.select(col("src"), col("dst")).distinct()
     val sdDistinct = seeds.select(col("node")).distinct()
     val sdT = sdDistinct.schema.fields(0).dataType
-    (collectSmall(eDistinct, withWeight = false),
-      if (LocalProbe.isIntegral(sdT) ||
-          sdT == org.apache.spark.sql.types.StringType)
-        LocalProbe.takeBounded(sdDistinct, maxLocalNodes(sdDistinct))
-      else None) match {
-      case (Some((es, dec, nodeF)), Some(sdRows))
-          if !sdRows.exists(_.isNullAt(0)) && sdT == nodeF.dataType =>
+    (LocalProbe.collect(eDistinct, LocalProbe.Edges, strings = true),
+      LocalProbe.collect(sdDistinct, LocalProbe.Nodes, keys = 1, strings = true)) match {
+      case (Some(g), Some(sdRows)) if sdT == eDistinct.schema.fields(0).dataType =>
+        val es = weighted(g)
         val nodes = (es.map(_._1) ++ es.map(_._2)).distinct
         // seed values -> encoded node codes (out-of-graph seeds drop,
         // exactly like the distributed left-semi intersect)
-        val decoded = nodes.map(n => dec(n) -> n).toMap
-        val sd = sdRows.flatMap(r => decoded.get(r.get(0))).toSet
+        val decoded = nodes.map(n => g.decode(n) -> n).toMap
+        val sd = sdRows.rows.flatMap(r => decoded.get(sdRows.decode(r(0)))).toSet
         require(sd.nonEmpty,
           "personalized PageRank needs a non-empty in-graph seed set")
         val tp = nodes.map(n =>
           n -> (if (sd(n)) 1.0 / sd.size else 0.0)).toMap
-        val rank = localLoop(es, iters, damping, tp)
-        localRanks(eDistinct.sparkSession, rank, dec, nodeF)
+        localRanks(eDistinct, localLoop(es, iters, damping, tp), g.decode)
       case _ => personalizedDistributed(eDistinct, sdDistinct, iters, damping)
     }
   }
@@ -185,10 +180,9 @@ object PageRank {
                   damping: Double = 0.85): DataFrame = {
     val eAgg = edges.groupBy("src", "dst")
       .agg(sum(col("weight")).as("w"))
-    collectSmall(eAgg, withWeight = true) match {
-      case Some((es, dec, nodeF)) =>
-        val rank = localLoop(es, iters, damping, tp = null)
-        localRanks(eAgg.sparkSession, rank, dec, nodeF)
+    LocalProbe.collect(eAgg, LocalProbe.Edges, strings = true) match {
+      case Some(g) =>
+        localRanks(eAgg, localLoop(weighted(g), iters, damping, tp = null), g.decode)
       case None => runWeightedDistributed(eAgg, iters, damping)
     }
   }
@@ -228,72 +222,22 @@ object PageRank {
   // on a few-thousand-node one (the nation trade graphs: the 4-table
   // edge BUILD is the at-scale work and stays distributed; only the
   // loop over the deduped/aggregated edge relation moves). Under the
-  // conf ceilings below the exact same iteration runs on the driver:
+  // LocalProbe ceilings the exact same iteration runs on the driver:
   // same expressions ((1−d)+d·coalesce(mass,0), rank·w/tw with the
   // same cast order), same iteration count. Float caveat: a double
   // mass sum's addend ORDER is engine-defined everywhere (Spark's
   // partition order, DuckDB's scan order, this loop's (dst, src)
   // order) — consumers round(…, 6), which absorbs the ~1e-15 noise;
   // oracle-verified at all SFs like the unrolled CTE chains already
-  // were. Oversized, null-bearing or non-integral-keyed graphs (and
-  // non-count weight types) take the distributed path unchanged.
+  // were. String keys (q428's word co-occurrence graph) are
+  // dictionary-encoded to dense longs. Oversized, null-bearing or
+  // non-integral, non-string-keyed graphs (and non-Long weights: double
+  // weights keep the distributed sum order) take the distributed path
+  // unchanged.
 
-  private def maxLocalNodes(df: DataFrame): Int = df.sparkSession.conf
-    .get("spark.graft.pagerank.localMaxNodes", "4096").toInt
-  private def maxLocalEdges(df: DataFrame): Int = df.sparkSession.conf
-    .get("spark.graft.pagerank.localMaxEdges", (1 << 20).toString).toInt
-
-  /** Collect a deduped (src, dst[, w]) edge relation under the local
-    * ceilings: equal-typed endpoints that are integral OR string (a
-    * string graph — q428's word co-occurrence — is dictionary-encoded
-    * to dense longs; the loop never ORDERS on keys for a value, only
-    * for deterministic double-accumulation order, so any stable
-    * encoding is sound), LongType weight (count sums — double weights
-    * keep the distributed sum order), no nulls, ≤ maxLocalEdges rows,
-    * ≤ maxLocalNodes distinct endpoints. Probed with ONE bounded
-    * CollectLimit job. Returns the encoded edges, a code→original-key
-    * decoder, and the output node field. */
-  private def collectSmall(e: DataFrame, withWeight: Boolean)
-      : Option[(Array[(Long, Long, Long)], Long => Any, StructField)] = {
-    val fs = e.schema.fields
-    val keyT = fs(0).dataType
-    if (fs(1).dataType != keyT) return None
-    if (!LocalProbe.isIntegral(keyT) && keyT != StringType) return None
-    if (withWeight && fs(2).dataType != LongType) return None
-    LocalProbe.takeBounded(e, maxLocalEdges(e)).flatMap { taken =>
-      val nulls = taken.exists(r =>
-        r.isNullAt(0) || r.isNullAt(1) || (withWeight && r.isNullAt(2)))
-      if (nulls) None
-      else {
-        val nodeF = StructField("node", keyT,
-          fs(0).nullable || fs(1).nullable)
-        def w(r: Row): Long = if (withWeight) r.getLong(2) else 1L
-        val encoded: Option[(Array[(Long, Long, Long)], Long => Any)] =
-          keyT match {
-            case StringType =>
-              val dict = taken.iterator
-                .flatMap(r => Iterator(r.getString(0), r.getString(1)))
-                .toArray.distinct.sorted
-              if (dict.length > maxLocalNodes(e)) None
-              else {
-                val idx = dict.iterator.zipWithIndex
-                  .map { case (s, i) => s -> i.toLong }.toMap
-                Some((taken.map(r => (idx(r.getString(0)),
-                  idx(r.getString(1)), w(r))),
-                  (i: Long) => dict(i.toInt)))
-              }
-            case _ =>
-              val rows = taken.map(r =>
-                (LocalProbe.longAt(r, 0), LocalProbe.longAt(r, 1), w(r)))
-              val nodes = mutable.HashSet.empty[Long]
-              rows.foreach { t => nodes += t._1; nodes += t._2 }
-              if (nodes.size > maxLocalNodes(e)) None
-              else Some((rows, LocalProbe.fromLong(_, keyT)))
-          }
-        encoded.map { case (rows, dec) => (rows, dec, nodeF) }
-      }
-    }
-  }
+  /** Collected edges as (src, dst, w), w = 1 on an unweighted relation. */
+  private def weighted(g: LocalProbe.Dense): Array[(Long, Long, Long)] =
+    g.rows.map(r => (r(0), r(1), if (r.length > 2) r(2) else 1L))
 
   /** The exact local replay of the distributed loop. `tp` = null runs
     * the uniform-teleport variants (rank₀ = 1, base (1−d)); a teleport
@@ -324,12 +268,15 @@ object PageRank {
     nodes.toSeq.map(n => n -> rank(n))
   }
 
-  private def localRanks(spark: SparkSession, ranks: Seq[(Long, Double)],
-                         dec: Long => Any, nodeF: StructField): DataFrame = {
+  /** Ranks as a LocalRelation typed like the distributed output: the
+    * node column takes the edge key type, nullable if either endpoint is. */
+  private def localRanks(e: DataFrame, ranks: Seq[(Long, Double)],
+                         dec: Long => Any): DataFrame = {
+    val fs = e.schema.fields
     val schema = StructType(Seq(
-      StructField("node", nodeF.dataType, nodeF.nullable),
+      StructField("node", fs(0).dataType, fs(0).nullable || fs(1).nullable),
       StructField("rank", DoubleType, nullable = false)))
     val rows = ranks.map { case (n, r) => Row(dec(n), r) }
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+    e.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
   }
 }

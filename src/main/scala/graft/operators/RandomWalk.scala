@@ -49,11 +49,11 @@ object RandomWalk {
     // pattern): each hop costs a join + a window + a checkpoint — pure
     // scheduling overhead on a schema-bounded graph. The md5-uniform
     // draw is a pure function of (cur, k, dst, salt), so the local
-    // replay is bit-exact, not merely float-close. Oversized, null or
+    // replay is bit-exact, not merely float-close. Under the LocalProbe
+    // ceilings the hops replay on the driver; oversized, null or
     // non-integral-keyed graphs take the distributed loop unchanged.
-    collectSmall(eDistinct) match {
-      case Some((es, nodeF)) =>
-        return localWalks(eDistinct, es, steps, salt, nodeF)
+    LocalProbe.collect(eDistinct, LocalProbe.Edges) match {
+      case Some(g) => return localWalks(eDistinct, g.pairs, steps, salt)
       case None => ()
     }
     val e = eDistinct.cache()
@@ -82,30 +82,6 @@ object RandomWalk {
     out
   }
 
-  private def maxLocalNodes(df: DataFrame): Int = df.sparkSession.conf
-    .get("spark.graft.randomwalk.localMaxNodes", "4096").toInt
-  private def maxLocalEdges(df: DataFrame): Int = df.sparkSession.conf
-    .get("spark.graft.randomwalk.localMaxEdges", (1 << 20).toString).toInt
-
-  private def collectSmall(e: DataFrame)
-      : Option[(Array[(Long, Long)], StructField)] = {
-    val fs = e.schema.fields
-    if (!LocalProbe.isIntegral(fs(0).dataType) ||
-        fs(0).dataType != fs(1).dataType) return None
-    LocalProbe.takeBounded(e, maxLocalEdges(e)).flatMap { taken =>
-      if (taken.exists(r => r.isNullAt(0) || r.isNullAt(1))) None
-      else {
-        val rows = taken.map(r =>
-          (LocalProbe.longAt(r, 0), LocalProbe.longAt(r, 1)))
-        val nodes = mutable.HashSet.empty[Long]
-        rows.foreach { t => nodes += t._1; nodes += t._2 }
-        if (nodes.size > maxLocalNodes(e)) None
-        else Some((rows, StructField("start", fs(0).dataType,
-          fs(0).nullable || fs(1).nullable)))
-      }
-    }
-  }
-
   /** Exactly Anonymize.md5Uniform for an integral key rendered the way
     * concat_ws renders it: first 8 hex chars of md5(key-salt) as a
     * 32-bit integer over 2³² — a pure function, so the local hop draw
@@ -121,14 +97,16 @@ object RandomWalk {
     * moves to the out-neighbor minimizing (md5u("cur|k|dst"), dst);
     * dead ends pad the remaining hops with null. */
   private def localWalks(e: DataFrame, es: Array[(Long, Long)], steps: Int,
-                         salt: String, startF: StructField): DataFrame = {
+                         salt: String): DataFrame = {
+    val fs = e.schema.fields
+    val keyT = fs(0).dataType
     val adj = mutable.HashMap.empty[Long, mutable.ArrayBuffer[Long]]
     es.foreach { case (s, d) =>
       adj.getOrElseUpdate(s, mutable.ArrayBuffer.empty[Long]) += d }
     val nodes = (es.map(_._1) ++ es.map(_._2)).distinct.sorted
-    val schema = StructType(StructField("start", startF.dataType,
-      startF.nullable) +: (1 to steps).map(k =>
-      StructField(s"s$k", startF.dataType, nullable = true)))
+    val schema = StructType(StructField("start", keyT,
+      fs(0).nullable || fs(1).nullable) +: (1 to steps).map(k =>
+      StructField(s"s$k", keyT, nullable = true)))
     val rows = nodes.map { start =>
       val hops = new Array[Any](steps)
       var cur: java.lang.Long = start
@@ -139,10 +117,10 @@ object RandomWalk {
             ds.minBy(d => (md5u(s"$cur|$k|$d", salt), d))
           }
         hops(k - 1) = next
-          .map(LocalProbe.fromLong(_, startF.dataType)).orNull
+          .map(LocalProbe.fromLong(_, keyT)).orNull
         cur = next.map(Long.box).orNull
       }
-      Row.fromSeq(LocalProbe.fromLong(start, startF.dataType) +: hops.toSeq)
+      Row.fromSeq(LocalProbe.fromLong(start, keyT) +: hops.toSeq)
     }.toSeq
     e.sparkSession.createDataFrame(
       java.util.Arrays.asList(rows: _*), schema)

@@ -144,18 +144,18 @@ object CurationPipeline {
   }
 
   private def runStages(spark: SparkSession, docs: DataFrame,
-          benchmarkIds: Column => Column = _ % 97 === 0,
-          tokenBudget: Int = 512,
-          nearDupThreshold: Double = 0.7,
-          maxDupGramFrac: Double = 0.6,
-          maxSubstringDupFrac: Double = 0.5,
-          domainCap: Long = Long.MaxValue,
-          minContainment: Double = 0.8,
-          maxJaccard: Double = 0.5,
-          maxWinnowDupFrac: Double = 0.5,
-          maxAvgNll: Double = Double.PositiveInfinity,
-          allowedLangs: Option[Set[String]] = None,
-          adaptiveQualityPct: Int = 0)
+          benchmarkIds: Column => Column,
+          tokenBudget: Int,
+          nearDupThreshold: Double,
+          maxDupGramFrac: Double,
+          maxSubstringDupFrac: Double,
+          domainCap: Long,
+          minContainment: Double,
+          maxJaccard: Double,
+          maxWinnowDupFrac: Double,
+          maxAvgNll: Double,
+          allowedLangs: Option[Set[String]],
+          adaptiveQualityPct: Int)
       : (DataFrame, Seq[Report], Seq[(String, DataFrame)]) = {
     val funnel = Seq.newBuilder[Report]
     // Each stage is MATERIALIZED once (localCheckpoint) before its

@@ -20,7 +20,6 @@ import graft.operators.Similarity
   */
 object Extras46 extends QueryPack {
 
-  private val Dim = 64
   import OracleVec.{dotSql, normSql}
 
   // --------------------------------------------------------------- q295

@@ -15,8 +15,6 @@ import graft.operators.Similarity
   */
 object Vectors2 extends QueryPack {
 
-  private val Dim = 64
-
   import OracleVec.{dotSql, normSql}
 
   /** Cosine with the SAME zero-norm guard as the Scala side

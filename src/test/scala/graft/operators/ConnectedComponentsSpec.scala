@@ -39,11 +39,9 @@ class ConnectedComponentsSpec extends GraftTestBase {
       .toDF("a", "b")
     val local = ConnectedComponents.components(edges, "a", "b")
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted
-    spark.conf.set("spark.graft.cc.localMaxEdges", "0")
-    val dist =
-      try ConnectedComponents.components(edges, "a", "b")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).sorted
-      finally spark.conf.unset("spark.graft.cc.localMaxEdges")
+    val dist = LocalProbe.withCeilings(nodes = LocalProbe.MaxNodes, edges = 0)(
+      ConnectedComponents.components(edges, "a", "b")
+        .collect().map(r => (r.getLong(0), r.getLong(1))).sorted)
     assert(local.sameElements(dist), s"local ${local.toSeq} vs distributed ${dist.toSeq}")
     assert(local.toMap.apply(7L) == 7L) // self-pair-only vertex keeps its id
     assert(local.toMap.apply(3L) == 1L)
@@ -52,11 +50,9 @@ class ConnectedComponentsSpec extends GraftTestBase {
   test("relations over the local ceiling take the distributed path") {
     // ceiling 2 < 3 distinct normalized pairs → distributed; result identical
     val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("a", "b")
-    spark.conf.set("spark.graft.cc.localMaxEdges", "2")
-    val cc =
-      try ConnectedComponents.components(edges, "a", "b")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      finally spark.conf.unset("spark.graft.cc.localMaxEdges")
+    val cc = LocalProbe.withCeilings(nodes = LocalProbe.MaxNodes, edges = 2)(
+      ConnectedComponents.components(edges, "a", "b")
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
     assert(cc == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
   }
 }

@@ -60,10 +60,8 @@ class LabelPropagationSpec extends GraftTestBase {
           (i.toLong, ((i + 1) % 30).toLong, 2L))
     }).toDF("src", "dst", "w")
     val local = LabelPropagation.run(e, 5).as[(Long, Long)].collect().toSet
-    spark.conf.set("spark.graft.labelprop.localMaxNodes", "0")
-    val dist =
-      try LabelPropagation.run(e, 5).as[(Long, Long)].collect().toSet
-      finally spark.conf.unset("spark.graft.labelprop.localMaxNodes")
+    val dist = LocalProbe.withCeilings(nodes = 0, edges = LocalProbe.MaxEdges)(
+      LabelPropagation.run(e, 5).as[(Long, Long)].collect().toSet)
     assert(local == dist, s"local $local\n dist $dist")
   }
 }

@@ -160,12 +160,9 @@ class LouvainSpec extends GraftTestBase {
   }
 
   /** Run `body` with the local cost dispatch forced OFF (every entry
-    * point takes the distributed path), restoring the conf after. */
-  private def forcedDistributed[T](body: => T): T = {
-    spark.conf.set("spark.graft.louvain.localMaxNodes", "0")
-    try body
-    finally spark.conf.unset("spark.graft.louvain.localMaxNodes")
-  }
+    * point takes the distributed path). */
+  private def forcedDistributed[T](body: => T): T =
+    LocalProbe.withCeilings(nodes = 0, edges = LocalProbe.MaxEdges)(body)
 
   private def collected(df: org.apache.spark.sql.DataFrame) =
     (df.schema.fields.map(f => (f.name, f.dataType)).toSeq,
@@ -210,13 +207,12 @@ class LouvainSpec extends GraftTestBase {
     assert(comm.exists(_.isNullAt(0)), "distributed null-group row lost")
     // an edge ceiling of 0 disables the local path outright
     val tiny = Seq((1L, 2L, 1L), (2L, 1L, 1L)).toDF("i", "j", "w")
-    spark.conf.set("spark.graft.louvain.localMaxEdges", "0")
-    try {
+    LocalProbe.withCeilings(nodes = LocalProbe.MaxNodes, edges = 0) {
       val out = Louvain.cluster(tiny, "i", "j", "w", 1)
       assert(out.queryExecution.optimizedPlan.collectLeaves().exists(
         !_.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]),
         "ceiling 0 still produced a LocalRelation result")
-    } finally spark.conf.unset("spark.graft.louvain.localMaxEdges")
+    }
   }
 
   test("Q is non-decreasing per round and beats the region partition") {

@@ -101,11 +101,8 @@ class PageRankSpec extends GraftTestBase {
           (i.toLong, 0L, 1L))
     }.toDF("src", "dst", "weight")
     val seeds = Seq(0L, 5L, 10L).toDF("node")
-    def forcedDistributed[T](body: => T): T = {
-      spark.conf.set("spark.graft.pagerank.localMaxNodes", "0")
-      try body
-      finally spark.conf.unset("spark.graft.pagerank.localMaxNodes")
-    }
+    def forcedDistributed[T](body: => T): T =
+      LocalProbe.withCeilings(nodes = 0, edges = LocalProbe.MaxEdges)(body)
     // string-keyed twin (q428's word-graph shape): the local path
     // dictionary-encodes the keys
     val eStr = e.select(concat(lit("w"), col("src")).as("src"),

@@ -65,9 +65,7 @@ class RandomWalkSpec extends GraftTestBase {
     def rows() = RandomWalk.walks(e, steps = 4, salt = "eq")
       .orderBy("start").collect().map(_.toSeq).toSeq
     val local = rows()
-    spark.conf.set("spark.graft.randomwalk.localMaxNodes", "0")
-    val dist = try rows()
-      finally spark.conf.unset("spark.graft.randomwalk.localMaxNodes")
+    val dist = LocalProbe.withCeilings(nodes = 0, edges = LocalProbe.MaxEdges)(rows())
     assert(local == dist, s"local $local\n dist $dist")
   }
 }
